@@ -178,7 +178,6 @@ class CrawlEngine:
             spark,
             store_path or tempfile.mkdtemp(prefix="crawlstore_"),
             seen_buckets=self.settings.seen_buckets,
-            bucketed_seen=self.settings.bucketed_seen,
         )
         # cooperative pause/stop gates, checked at round boundaries —
         # the set-model restatement of the reference's Notify gates
@@ -223,15 +222,6 @@ class CrawlEngine:
                     monitor_interval_ms=self.settings.monitor_interval_ms,
                 ),
                 spark_context=spark.sparkContext,
-            )
-        self.bloom = None
-        if self.settings.use_bloom_sidecar:
-            from scrapy_rs_spark.sources.bloom import BloomSidecar
-
-            self.bloom = BloomSidecar(
-                os.path.join(self.store.root, "bloom"),
-                n_buckets=self.settings.seen_buckets,
-                bits_per_bucket=self.settings.bloom_bits_per_bucket,
             )
 
     # ---- per-host budget for a round (politeness T1 + per-domain cap F6) ----
@@ -278,12 +268,6 @@ class CrawlEngine:
         __init__). Semantically identical to store.load_seen(); costs
         one directory listing for the newest delta instead of one per
         committed delta per round."""
-        if self.store.bucketed_seen:
-            # the bucketed table is ONE catalog-backed scan — no
-            # per-round delta dirs to union, so the incremental cache
-            # has nothing to save; the scan's bucketed partitioning is
-            # what makes the anti-join exchange-free on this side
-            return self.store.load_seen()
         valid = self.store.seen_delta_rounds()
         gen = self.store.seen_generation()
         if (
@@ -831,9 +815,7 @@ class CrawlEngine:
         _mark("enq-built")
         seen = self._load_seen()
         _mark("seen-load")
-        candidates = anti_join_seen(
-            candidates, seen, bloom=self.bloom
-        ).select(*FRONTIER_COLS)
+        candidates = anti_join_seen(candidates, seen).select(*FRONTIER_COLS)
         _mark("antijoin-built")
         # one materialization — candidates feed the count, the seen delta,
         # and the frontier commit; without this the parse-UDF chain would
@@ -950,20 +932,6 @@ class CrawlEngine:
             metrics,
             clean=False,
         )
-        if self.bloom is not None and metrics["new_urls"]:
-            # sidecar built AFTER the exact commit: a crash can leave the
-            # bloom lagging (extra anti-join probes) but never ahead
-            # (which could wrongly mark URLs maybe-seen before they are)
-            self.bloom.update_from(
-                candidates.select(
-                    "url_hash",
-                    F.pmod(
-                        F.col("url_hash"), F.lit(self.settings.seen_buckets)
-                    )
-                    .cast("int")
-                    .alias("bucket"),
-                )
-            )
         self._release_round_rdds(_rdds_before)
         _mark("commit")
         if _prof:
@@ -1030,7 +998,7 @@ class CrawlEngine:
             None,
             None,
             {
-                "round": 0,  # seeds are marked seen at enqueue (bloom below)
+                "round": 0,  # seeds are marked seen at enqueue
                 "requests": 0,
                 "responses": 0,
                 "items": 0,
@@ -1042,17 +1010,6 @@ class CrawlEngine:
             },
             clean=False,
         )
-        if self.bloom is not None:
-            self.bloom.update_from(
-                frontier0_disk.select(
-                    "url_hash",
-                    F.pmod(
-                        F.col("url_hash"), F.lit(s.seen_buckets)
-                    )
-                    .cast("int")
-                    .alias("bucket"),
-                )
-            )
         stats = self.resume(max_rounds=max_rounds)
         # run()'s duration includes the seeding commit above
         stats.duration_s = _time.monotonic() - _t_run

@@ -42,15 +42,11 @@ class Settings:
     url_allow_pattern: str | None = None
     url_deny_pattern: str | None = None
     # spark-side knobs (no reference analogue; scale levers)
-    seen_buckets: int = 32  # hash buckets of the seen-set table (1000s at 10^10)
-    # store the seen set as a Spark bucketed TABLE (bucketBy url_hash +
-    # sortBy, saveAsTable) instead of per-round parquet delta dirs: the
-    # anti-join's seen side then needs NO Exchange — the sandbox
-    # demonstration of the Iceberg storage-partitioned join the 10^10
-    # design relies on (the seen set is never re-shuffled). Off by
-    # default: the delta layout keeps commits O(new urls) without a
-    # catalog; see sources/store.py.
-    bucketed_seen: bool = False
+    # hash buckets of each round's seen-delta dir (1000s at 10^10): the
+    # delta is written partitionBy(pmod(url_hash, seen_buckets)), one
+    # file per bucket. Membership keys on url_hash alone, so a resumed
+    # crawl may change it; see sources/store.py for the one seen layout
+    seen_buckets: int = 32
     host_salts: int = 4  # default salt fan-out for hot hosts
     round_duration_ms: int = 10_000  # politeness budget discretization window
     seen_compact_every: int = 16  # fold seen deltas every N rounds
@@ -70,12 +66,6 @@ class Settings:
     # (rows × ~250 B must fit comfortably under the 8 GB broadcast
     # cap); the default keeps broadcasts ≤ ~125 MB.
     fetch_broadcast_max_batch: int = 500_000
-    # per-bucket bloom pre-filter (north rule). NOTE: the sidecar writes
-    # per-bucket .npy files under <store>/bloom — on a real cluster the
-    # store path MUST be shared storage (HDFS/S3/NFS) visible to every
-    # executor, same as the store itself
-    use_bloom_sidecar: bool = False
-    bloom_bits_per_bucket: int = 1 << 20
     # close-lifecycle bound (engine/src/lib.rs:1285-1420: the reference
     # wraps each spider/pipeline/middleware close hook in a 5 s timeout
     # so a hanging hook cannot hang crawl exit)

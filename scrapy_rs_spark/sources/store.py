@@ -18,10 +18,14 @@ an Iceberg snapshot commit; resume reads the max committed round
 (reference analogue: EngineState save/load,
 /root/reference/engine/src/lib.rs:1196-1252).
 
-Seen-set = union of seen_delta across committed rounds, hash-bucketed by
-``pmod(url_hash, seen_buckets)`` so membership probes prune buckets and
-the anti-join co-partitions. Deltas keep commits O(new urls), not
-O(total seen); `compact_seen` folds deltas when they pile up.
+Seen-set = union of seen_delta across committed rounds, each delta
+partitioned by ``bucket = pmod(url_hash, seen_buckets)`` (the Iceberg
+bucket transform in production). This is the only seen layout:
+membership keys on url_hash alone, so the bucket count is free to
+change between runs. Deltas keep commits O(new urls), not O(total
+seen); `compact_seen` folds deltas when they pile up, and opening a
+store finishes a compaction the driver died inside or clears its
+leftovers.
 
 Reading state back each round also truncates DataFrame lineage — the
 iterative-loop plan would otherwise grow unboundedly.
@@ -47,131 +51,59 @@ class CrawlStore:
         spark: SparkSession,
         root: str,
         seen_buckets: int = 32,
-        bucketed_seen: bool = False,
     ):
-        """bucketed_seen=True stores the seen set as a Spark BUCKETED
-        TABLE (bucketBy(url_hash) + sortBy, external location under the
-        store root) instead of per-round parquet delta dirs. The
-        bucketed scan's output partitioning satisfies the anti-join's
-        clustering requirement, so the seen side joins with NO Exchange
-        — the sandbox demonstration of the design's Iceberg
-        storage-partitioned join (SURVEY §4.2): the 10^10-row seen set
-        is never re-shuffled; only the (small) per-round candidate batch
-        is. Commit discipline is preserved: delta rows carry their round
-        number and readers filter to committed rounds, so an interrupted
-        append is invisible (a crash-then-rerun can leave duplicate
-        url_hash rows for one round — harmless to anti-join membership,
-        same guarantee compact_seen documents)."""
+        """seen_buckets only sets the bucket column of deltas written by
+        this instance; membership keys on url_hash alone, so a store can
+        be reopened with a different count."""
         self.spark = spark
         self.root = root
         self.seen_buckets = seen_buckets
-        self.bucketed_seen = bucketed_seen
+        self._reject_removed_layouts()
         os.makedirs(self._rounds_dir(), exist_ok=True)
-        if bucketed_seen:
-            self._ensure_seen_table()
+        self._recover_seen_compaction()
 
-    # ---- bucketed seen table ----
-    @property
-    def _seen_table(self) -> str:
-        import hashlib
-
-        tag = hashlib.md5(
-            os.path.abspath(self.root).encode()
-        ).hexdigest()[:12]
-        return f"crawl_seen_{tag}"
-
-    def _seen_table_path(self) -> str:
-        return os.path.join(self.root, "seen_bucketed")
-
-    def _seen_meta_path(self) -> str:
-        return os.path.join(self.root, "seen_bucketed_meta.json")
-
-    def _recover_seen_table_dir(self) -> None:
-        """Crash recovery for _compact_seen_bucketed's rename window: the
-        compacted table is fully written to ``seen_bucketed_compact``
-        BEFORE the two renames (main → ``_old``, ``_compact`` → main), so
-        a crash between them leaves main missing with the complete data
-        in one (or both) side dirs. Without this, a restart would
-        register NO seen table and silently treat the whole crawl
-        history as unseen. Prefer the compacted dir (the newer state);
-        fall back to the pre-compaction backup."""
-        path = self._seen_table_path()
-        if os.path.isdir(path):
+    def _reject_removed_layouts(self) -> None:
+        """Fail loud on a store written with a seen layout this build no
+        longer has (a catalog-bucketed seen table, or a bloom sidecar).
+        Opened as a plain store, its seen set would read as empty and
+        the crawl would silently refetch everything it had seen."""
+        if not os.path.isdir(self.root):
             return
-        tmp = path + "_compact"
-        bak = path + "_old"
-        for cand in (tmp, bak):
-            if os.path.isdir(cand):
-                os.replace(cand, path)
-                break
-        else:
+        for name in sorted(os.listdir(self.root)):
+            if name.startswith("seen_bucketed"):
+                layout = "bucketed seen table"
+            elif name == "bloom":
+                layout = "bloom sidecar"
+            else:
+                continue
+            raise ValueError(
+                f"store at {self.root} uses the removed {layout} layout"
+                f" ({name}); it cannot be opened by this build"
+            )
+
+    def _recover_seen_compaction(self) -> None:
+        """Finish a compact_seen the driver died inside, or drop its
+        leftovers. compact_seen writes the folded set to
+        ``seen_delta_compact`` in full BEFORE it renames ``seen_delta``
+        to ``seen_delta_old``, so an ``_old`` dir means the compacted
+        dir is complete. Only the newest committed round is compacted
+        into, and no round commits after a crash until the store is
+        reopened. Like begin_round, this assumes the store has one
+        writer."""
+        latest = self.latest_round()
+        if latest is None:
             return
+        main = os.path.join(self._round_dir(latest), "seen_delta")
+        tmp = main + "_compact"
+        bak = main + "_old"
+        if os.path.isdir(bak):
+            if not os.path.isdir(main):
+                # died between the swap's two renames
+                os.replace(tmp, main)
+                self._bump_seen_generation()
+            shutil.rmtree(bak)
+        # a dir still named _compact was never swapped in
         shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(bak, ignore_errors=True)
-
-    def _check_seen_meta(self) -> None:
-        """Pin the bucket count at table creation. Bucketing is declared
-        per-session from CURRENT settings (``CLUSTERED BY ... INTO N
-        BUCKETS`` over existing files); resuming with a different
-        ``seen_buckets`` would silently declare WRONG bucketing over the
-        on-disk layout and the exchange-free anti-join could mis-cluster
-        — letting already-seen URLs through. Fail loud instead."""
-        meta = self._seen_meta_path()
-        if os.path.exists(meta):
-            with open(meta) as f:
-                stored = json.load(f).get("seen_buckets")
-            if stored != self.seen_buckets:
-                raise ValueError(
-                    f"seen_bucketed table at {self._seen_table_path()} was"
-                    f" created with seen_buckets={stored}; this store was"
-                    f" opened with seen_buckets={self.seen_buckets}."
-                    " Reopen with the original bucket count (or compact"
-                    " with the original count first)."
-                )
-        else:
-            tmp = meta + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"seen_buckets": self.seen_buckets}, f)
-            os.replace(tmp, meta)
-
-    def _ensure_seen_table(self) -> None:
-        """Register the bucketed seen table in the session catalog.
-        Bucketing metadata lives in the CATALOG, not the files — a new
-        session (resume) must re-register the existing location or the
-        scan degrades to a plain parquet read (and the anti-join would
-        re-shuffle the seen side)."""
-        self._recover_seen_table_dir()
-        self._check_seen_meta()
-        if self.spark.catalog.tableExists(self._seen_table):
-            return
-        path = self._seen_table_path()
-        if os.path.isdir(path):
-            # resume in a fresh session: re-attach the existing data
-            self.spark.sql(
-                f"CREATE TABLE {self._seen_table}"
-                " (url_hash BIGINT, bucket INT, round INT)"
-                " USING parquet"
-                " CLUSTERED BY (url_hash) SORTED BY (url_hash)"
-                f" INTO {self.seen_buckets} BUCKETS"
-                f" LOCATION '{path}'"
-            )
-
-    def _append_seen_bucketed(self, seen_delta: DataFrame, rnd: int) -> None:
-        (
-            seen_delta.select(
-                F.col("url_hash").cast("bigint").alias("url_hash"),
-                F.pmod(F.col("url_hash"), F.lit(self.seen_buckets))
-                .cast("int")
-                .alias("bucket"),
-                F.lit(rnd).cast("int").alias("round"),
-            )
-            .write.format("parquet")
-            .bucketBy(self.seen_buckets, "url_hash")
-            .sortBy("url_hash")
-            .option("path", self._seen_table_path())
-            .mode("append")
-            .saveAsTable(self._seen_table)
-        )
 
     # ---- layout ----
     def _rounds_dir(self) -> str:
@@ -198,10 +130,7 @@ class CrawlStore:
     # ---- commit ----
     def begin_round(self, rnd: int) -> None:
         """Clear any uncommitted leftovers for a round so partial writes
-        (write_items before commit_round) start from a clean dir. The
-        (empty) dir is created so a round whose parquet all lands
-        elsewhere (bucketed seen table) can still seal metrics/MANIFEST
-        into it."""
+        (write_items before commit_round) start from a clean dir."""
         d = self._round_dir(rnd)
         if os.path.exists(d):
             shutil.rmtree(d)  # re-running an uncommitted round is safe
@@ -228,17 +157,9 @@ class CrawlStore:
 
     def write_seen_delta(self, rnd: int, seen_delta: DataFrame) -> None:
         """Stage a round's seen delta ahead of commit_round (invisible
-        to readers until MANIFEST: the plain layout lives inside the
-        round dir, the bucketed table tags rows with the round and
-        readers filter to committed rounds). Lets the engine overlap
-        the items / frontier / seen writes; pass seen_delta=None to
-        commit_round afterwards."""
-        if self.bucketed_seen:
-            # append into the bucketed table, tagged with the round;
-            # readers filter to committed rounds so this stays invisible
-            # until MANIFEST lands
-            self._append_seen_bucketed(seen_delta, rnd)
-            return
+        to readers until MANIFEST: it lives inside the round dir). Lets
+        the engine overlap the items / frontier / seen writes; pass
+        seen_delta=None to commit_round afterwards."""
         (
             seen_delta.withColumn(
                 "bucket",
@@ -302,50 +223,20 @@ class CrawlStore:
 
     def load_seen(self, upto_round: int | None = None) -> DataFrame:
         """Union of committed seen deltas ≤ upto_round."""
-        if self.bucketed_seen:
-            # one bucketed-table scan, filtered to committed rounds
-            # (uncommitted appends are always > the latest committed
-            # round — rounds commit in order). The filter is a cheap
-            # data filter; the scan keeps its bucketed output
-            # partitioning, so downstream anti-joins need no Exchange
-            # on this side.
-            self._ensure_seen_table()
-            if not self.spark.catalog.tableExists(self._seen_table):
-                return self.spark.createDataFrame(
-                    [], "url_hash BIGINT, bucket INT"
-                )
-            latest = self.latest_round()
-            if latest is None:
-                return self.spark.createDataFrame(
-                    [], "url_hash BIGINT, bucket INT"
-                )
-            cutoff = latest if upto_round is None else min(latest, upto_round)
-            return (
-                self.spark.table(self._seen_table)
-                .filter(F.col("round") <= F.lit(cutoff))
-                .select("url_hash", "bucket")
-            )
         rounds = self.committed_rounds()
         if upto_round is not None:
             rounds = [r for r in rounds if r <= upto_round]
-        paths = [
-            os.path.join(self._round_dir(r), "seen_delta") for r in rounds
-        ]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if not paths:
+        # one read per delta (each has its own bucket= partition root);
+        # a multi-path read would trip partition-discovery conflicts
+        deltas = [self.load_seen_delta(r) for r in rounds]
+        deltas = [d for d in deltas if d is not None]
+        if not deltas:
             return self.spark.createDataFrame(
                 [], "url_hash BIGINT, bucket INT"
             )
-        # one read per delta (each has its own bucket= partition root);
-        # a multi-path read would trip partition-discovery conflicts
-        out = None
-        for p in paths:
-            df = (
-                self.spark.read.schema("url_hash BIGINT, bucket INT")
-                .parquet(p)
-                .select("url_hash", "bucket")
-            )
-            out = df if out is None else out.unionByName(df)
+        out = deltas[0]
+        for df in deltas[1:]:
+            out = out.unionByName(df)
         return out
 
     def seen_delta_rounds(self) -> set[int]:
@@ -400,12 +291,11 @@ class CrawlStore:
         ordering: the full union is written to a side dir first, swapped
         into the latest round, THEN earlier deltas are removed — a crash
         between swap and removal only leaves duplicate url_hash rows,
-        which are harmless to anti-join membership. Bumps
+        which are harmless to anti-join membership, and a crash inside
+        the swap is repaired when the store is next opened
+        (_recover_seen_compaction). Bumps
         seen_generation() last so incremental-cache holders notice the
         in-place rewrite of the newest delta dir."""
-        if self.bucketed_seen:
-            self._compact_seen_bucketed()
-            return
         rounds = self.committed_rounds()
         if len(rounds) < 2:
             return
@@ -425,61 +315,6 @@ class CrawlStore:
                 os.path.join(self._round_dir(r), "seen_delta"),
                 ignore_errors=True,
             )
-        self._bump_seen_generation()
-
-    def _compact_seen_bucketed(self) -> None:
-        """Rewrite the bucketed seen table to ONE file per bucket
-        (Iceberg analogue: rewrite_data_files). Appends land 1 file per
-        bucket per round, so a long crawl accumulates buckets×rounds
-        files — a 10^5-round standing crawl would hold millions — and a
-        bucket spread over many files forfeits the SORTED BY metadata
-        (Spark only reports sorted scan output for single-file buckets),
-        so every anti-join re-sorts the seen side. Compaction restores
-        both bounds: file count = buckets, and the SMJ's seen-side Sort
-        is elided.
-
-        Crash-safety mirrors compact_seen's plain path: the folded table
-        is fully written to a side location first, then swapped in with
-        two renames; a crash between them leaves either the old data or
-        a recoverable ``seen_bucketed_old`` (plus at worst duplicate
-        url_hash rows, harmless to anti-join membership). The catalog
-        entries are session-scoped metadata and are re-registered from
-        the on-disk location afterwards."""
-        latest = self.latest_round()
-        if latest is None:
-            return
-        main = self._seen_table_path()
-        if not os.path.isdir(main):
-            return
-        tmp = main + "_compact"
-        bak = main + "_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(bak, ignore_errors=True)
-        tmp_table = self._seen_table + "_compact"
-        folded = (
-            self.load_seen()  # committed rounds only
-            .dropDuplicates(["url_hash"])
-            .withColumn("round", F.lit(latest).cast("int"))
-            .select("url_hash", "bucket", "round")
-            # one output file per bucket: coalesce writer tasks to the
-            # bucket count so each bucket's rows land in a single task
-            .repartition(self.seen_buckets, F.col("url_hash"))
-        )
-        (
-            folded.write.format("parquet")
-            .bucketBy(self.seen_buckets, "url_hash")
-            .sortBy("url_hash")
-            .option("path", tmp)
-            .mode("overwrite")
-            .saveAsTable(tmp_table)
-        )
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
-        os.replace(main, bak)
-        os.replace(tmp, main)
-        shutil.rmtree(bak, ignore_errors=True)
-        self._ensure_seen_table()
-        self.spark.catalog.refreshTable(self._seen_table)
         self._bump_seen_generation()
 
     def load_host_served(self, rnd: int) -> DataFrame:
@@ -565,58 +400,6 @@ class CrawlStore:
                             "bytes": os.path.getsize(fp),
                         }
                     )
-        if self.bucketed_seen:
-            out.extend(self._bucketed_delta_lineage(rnd))
-        return out
-
-    def _bucketed_delta_lineage(self, rnd: int) -> list[dict]:
-        """Lineage for a bucketed-seen append: the round's delta rows
-        live inside the shared bucketed table, so the round's files are
-        identified by their footer statistics (every row group has
-        round min == max == rnd — each append writes only its own round
-        tag). The bucket id is the Spark bucketed-file suffix
-        (part-XXXXX-<uuid>_NNNNN.*). Records taken at commit time stay
-        valid as historical commit records even after compact_seen
-        rewrites the table."""
-        import re
-
-        import pyarrow.parquet as pq
-
-        loc = self._seen_table_path()
-        if not os.path.isdir(loc):
-            return []
-        out = []
-        for dirpath, _dirs, files in os.walk(loc):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                fp = os.path.join(dirpath, fn)
-                md = pq.ParquetFile(fp).metadata
-                names = md.schema.to_arrow_schema().names
-                if "round" not in names:
-                    continue
-                ci = names.index("round")
-                stats = [
-                    md.row_group(g).column(ci).statistics
-                    for g in range(md.num_row_groups)
-                ]
-                if not stats or any(
-                    s is None or s.min != rnd or s.max != rnd for s in stats
-                ):
-                    continue
-                m = re.search(r"_(\d{5})\.", fn)
-                out.append(
-                    {
-                        "round": rnd,
-                        "dataset": "seen_delta",
-                        "partition": (
-                            f"bucket={int(m.group(1))}" if m else ""
-                        ),
-                        "file": fn,
-                        "rows": md.num_rows,
-                        "bytes": os.path.getsize(fp),
-                    }
-                )
         return out
 
     def load_lineage(self, rounds: list[int] | None = None) -> list[dict]:

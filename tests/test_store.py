@@ -91,29 +91,29 @@ def test_lineage_plain_store_reconciles_with_deltas(spark, tmp_path):
     assert agg[(2, "seen_delta")] == 30
 
 
-def test_lineage_bucketed_store_attributes_rounds(spark, tmp_path):
-    """Bucketed-seen lineage identifies each append's files inside the
-    shared table via footer round-statistics: per-round sums match the
-    delta sizes even though all rounds share one table directory."""
-    store = CrawlStore(
-        spark, str(tmp_path / "linb"), seen_buckets=4, bucketed_seen=True
-    )
-    store.commit_round(
-        1, _empty_frontier(spark), _seen_rows(spark, range(50)), None,
-        None, {"round": 1},
-    )
-    store.commit_round(
-        2, _empty_frontier(spark), _seen_rows(spark, range(50, 70)), None,
-        None, {"round": 2},
-    )
-    lin = store.load_lineage()
-    for rnd, expect in ((1, 50), (2, 20)):
-        rows = [
-            r for r in lin
-            if r["round"] == rnd and r["dataset"] == "seen_delta"
-        ]
-        assert sum(r["rows"] for r in rows) == expect
-        assert all(r["partition"].startswith("bucket=") for r in rows)
-    # lineage survives compaction as a historical commit record
-    store.compact_seen()
-    assert store.load_lineage() == lin
+def test_removed_seen_layouts_fail_loud(spark, tmp_path):
+    """A store written with a seen layout this build no longer has must
+    not open as a plain store: its seen set would read as empty and the
+    crawl would refetch everything."""
+    import pytest
+
+    markers = {
+        "seen_bucketed": "bucketed seen table",
+        "seen_bucketed_meta.json": "bucketed seen table",
+        "bloom": "bloom sidecar",
+    }
+    for marker, layout in markers.items():
+        root = tmp_path / marker.replace(".", "_")
+        store = CrawlStore(spark, str(root), seen_buckets=4)
+        store.commit_round(
+            1, _empty_frontier(spark), _seen_rows(spark, range(10)), None,
+            None, {"round": 1},
+        )
+        if marker.endswith(".json"):
+            (root / marker).write_text('{"seen_buckets": 4}')
+        else:
+            (root / marker).mkdir()
+        with pytest.raises(ValueError, match=layout) as err:
+            CrawlStore(spark, str(root), seen_buckets=4)
+        assert "cannot be opened by this build" in str(err.value)
+        assert marker in str(err.value)
