@@ -13,6 +13,10 @@ requests → pipeline items. One crawl ROUND here is one Spark DAG:
            ──in-batch dedup──► ──anti-join seen──► new frontier rows
   commit(frontier', seen_delta, items, metrics) → next round
 
+The fetch → anti-join span is build_round_plan, which the streaming
+crawl (streaming/frontier_stream.py) runs as its micro-batch body; the
+ranking, leftover, retries and the staged commit are CrawlEngine's own.
+
 The driver loop repeats until the frontier drains (scheduler empty,
 lib.rs:519) or page_limit is reached. Every round is an atomic commit
 (CrawlStore) → pause/resume at any round boundary (reference
@@ -25,11 +29,10 @@ so Spark task retries and re-runs produce identical crawls.
 
 from __future__ import annotations
 
-import os
 import tempfile
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from scrapy_rs_spark.functions.text import (
@@ -42,7 +45,11 @@ from scrapy_rs_spark.operators.dedup import anti_join_seen, dedup_in_batch
 from scrapy_rs_spark.operators.fetch import (
     build_retries,
     fetch_join,
+    is_redirect,
+    is_retryable,
+    is_success,
     split_fetched,
+    strict_spacing,
 )
 from scrapy_rs_spark.operators.scheduler import (
     apply_enqueue_filters,
@@ -51,31 +58,10 @@ from scrapy_rs_spark.operators.scheduler import (
     robots_filter,
     take_batch,
 )
+from scrapy_rs_spark.schemas import FRONTIER_COLS, FRONTIER_SCHEMA
 from scrapy_rs_spark.settings import Settings
 from scrapy_rs_spark.sources.seeds import seeds_frontier
 from scrapy_rs_spark.sources.store import CrawlStore
-
-FRONTIER_COLS = [
-    "url",
-    "url_canon",
-    "url_hash",
-    "host",
-    "method",
-    "priority",
-    "depth",
-    "discovery_round",
-    "discovery_seq",
-    "retry_count",
-    "dont_filter",
-    "retry_not_before_round",
-    "meta",
-    "body",
-    "cookies",
-    "timeout_ms",
-    "encoding",
-    "flags",
-    "proxy",
-]
 
 # effectively-unlimited per-host budget when no politeness delay is set
 _UNLIMITED = 1 << 31
@@ -119,6 +105,343 @@ class CrawlStats:
         if self.duration_s <= 0:
             return None
         return self.requests / self.duration_s
+
+
+def _local_checkpoint(df: DataFrame, held: list) -> DataFrame:
+    """Lazy localCheckpoint whose RDD is appended to ``held``, so the
+    driver can release exactly its round's own blocks (and never an RDD
+    a user middleware or pipeline cached) once its writes are done."""
+    df = df.localCheckpoint(eager=False)
+    held.append(df._jdf.queryExecution().logical().rdd())
+    return df
+
+
+def release_checkpoints(held: list) -> None:
+    """Drop a round's localCheckpoint blocks after its writes. Every
+    round checkpoints its batch/fetched/parsed/candidates frames (html +
+    text payloads — hundreds of MB per large round); the next round
+    re-reads state from the store, so these blocks are dead weight that
+    otherwise accumulates for the whole crawl (guide §5: unpersist when
+    done — measured as round-over-round slowdown and GC pressure on the
+    200k crawl, and the dominant memory load of the 4M sustained
+    crawl)."""
+    for rdd in held:
+        try:
+            rdd.unpersist(False)
+        except Exception:
+            pass  # cache hygiene only — never fail a committed round
+    held.clear()
+
+
+def _new_requests(df: DataFrame, rnd: int, **cols) -> DataFrame:
+    """GET requests to ``df.url`` discovered in round ``rnd`` as frontier
+    rows, in ONE Project in FRONTIER_COLS order — a withColumn chain
+    here adds ~16 nested Projects that Catalyst must analyze and
+    collapse EVERY round; measured ~1.5 s/round of pure planning time
+    on the politeness crawl (localCheckpoint plans the query even when
+    lazy). ``cols`` overrides the request defaults per source; columns
+    neither fixed here nor given are NULL. url is canonical (urljoin
+    output), and proxy is never inherited (the reference never copies
+    it onto a followed Request)."""
+    url = F.col("url")
+    cols = {
+        "url": url,
+        "url_canon": url,
+        "url_hash": url_hash_expr(url, F.lit("GET")),
+        "host": F.expr("parse_url(url, 'HOST')"),
+        "method": F.lit("GET"),
+        "priority": F.lit(0),
+        "discovery_round": F.lit(rnd + 1),
+        "discovery_seq": F.lit(0).cast("long"),
+        "retry_count": F.lit(0),
+        "dont_filter": F.lit(False),
+        "retry_not_before_round": F.lit(0),
+        **cols,
+    }
+    return df.select(
+        *[
+            (
+                cols[c] if c in cols
+                else F.lit(None).cast(FRONTIER_SCHEMA[c].dataType)
+            ).alias(c)
+            for c in FRONTIER_COLS
+        ]
+    )
+
+
+@dataclass
+class RoundPlan:
+    """A round's plan after fetch and routing: the route counters, the
+    retryable responses, the lazy items and candidates frames a driver
+    writes, and the checkpoints it releases after those writes."""
+
+    retry: DataFrame
+    n_batch: int
+    n_responses: int  # 2xx + 3xx
+    n_retry: int
+    n_error: int
+    items: DataFrame
+    candidates: DataFrame
+    checkpoints: list
+    obs_raw: Observation
+    obs_out: Observation | None
+
+    def item_counts(self) -> tuple[int, int]:
+        """(items written, undecodable pages) — resolved by the items
+        write, so valid only after it."""
+        raw = self.obs_raw.get
+        n_null_text = int(raw["n_null"] or 0)
+        if self.obs_out is not None:
+            return int(self.obs_out.get["n"] or 0), n_null_text
+        return int(raw["n"] or 0) - n_null_text, n_null_text
+
+
+def build_round_plan(
+    batch: DataFrame,
+    pages: DataFrame,
+    seen: DataFrame,
+    rnd: int,
+    settings: Settings,
+    broadcast: bool,
+    host_delays: DataFrame | None = None,
+    response_middlewares=None,
+    parse_udfs: tuple | None = None,
+    item_pipelines=None,
+) -> RoundPlan:
+    """The shared body of a crawl round: fetch → route counters → parse
+    → items + candidates (parsed links and followed redirects) → enqueue
+    filters → in-batch dedup → seen anti-join → candidates checkpoint.
+    CrawlEngine rounds and StreamingCrawl micro-batches both run it.
+
+    ``broadcast`` picks the fetch join shape (see fetch_join);
+    ``host_delays`` (robots Crawl-delay rows) feeds strict spacing;
+    ``parse_udfs`` = (text, links, fields) replaces the default
+    single-pass parse. Runs ONE Spark job (the route-counter aggregate);
+    every other frame stays lazy for the driver's writes. fetch_join and
+    anti_join_seen are looked up in this module's globals, where the
+    round-phase tracer hooks them."""
+    s = settings
+    held: list = []
+    # ---- fetch (J2) + route ----
+    # strict mode (T1 fidelity, slot.rs:127-137): pace ONLY the frame
+    # feeding the fetch join — the fetched checkpoint below
+    # materializes it exactly once, so the sleeps run once per round
+    # and every other consumer of `batch` (leftover anti-join,
+    # counters) reads the unpaced rows. Row membership is identical.
+    delay = max(s.domain_delay_ms, s.download_delay_ms)
+    fetch_src = batch
+    if s.strict_delay and (delay > 0 or host_delays is not None):
+        fetch_src = strict_spacing(
+            batch, default_delay_ms=delay, host_delays=host_delays
+        )
+    fetched = fetch_join(
+        fetch_src,
+        pages,
+        default_timeout_ms=s.request_timeout_ms,
+        broadcast_batch=broadcast,
+    )
+    if response_middlewares is not None:
+        fetched = response_middlewares(fetched)  # X3
+    # lazy: the counter agg right below materializes the fetch join
+    # and computes all five route counters in ONE job
+    fetched = _local_checkpoint(fetched, held)
+    routes = split_fetched(fetched)
+    # ONE aggregation for all route counters (5 counts = 1 job, not 5
+    # — per-round driver actions are the fixed cost of a round)
+    st = F.col("status")
+    crow = fetched.agg(
+        F.count("*").alias("n"),
+        F.sum(is_success(st).cast("long")).alias("ok"),
+        F.sum(is_redirect(st).cast("long")).alias("red"),
+        F.sum(is_retryable(st).cast("long")).alias("rty"),
+        F.sum(
+            (
+                ~is_success(st) & ~is_redirect(st) & ~is_retryable(st)
+            ).cast("long")
+        ).alias("err"),
+    ).collect()[0]
+    n_redirect = crow["red"] or 0
+
+    # ---- parse (X1): items + links, one pandas-UDF pass ----
+    # AQE coalesces a sort-merge fetch-join's output by SIZE (html
+    # bytes), which can serialize the Python parse stage onto 1-2
+    # tasks; the parse cost is per-row CPU, so spread it across all
+    # cores explicitly — but ONLY on the sort-merge path: the
+    # broadcast-batch join preserves the pages scan's partitioning,
+    # and repartitioning there would shuffle every html byte once for
+    # nothing (guide §2.4)
+    success = routes["success"]
+    if not broadcast:
+        success = success.repartition(
+            batch.sparkSession.sparkContext.defaultParallelism
+        )
+    # optional transport metadata (response.rs:35-45) projected by
+    # fetch_join when the pages table carries it — surfaced to item
+    # pipelines through the items.fields map (response middlewares
+    # already see the raw columns on the fetched frame)
+    transport = [
+        c
+        for c in ("certificate", "ip_address", "protocol")
+        if c in fetched.columns
+    ]
+    if transport:
+        transport_fields = F.map_filter(
+            F.map_from_arrays(
+                F.array(*[F.lit(c) for c in transport]),
+                F.array(*[F.col(c).cast("string") for c in transport]),
+            ),
+            lambda _, v: v.isNotNull(),
+        )
+    else:
+        transport_fields = F.lit(None).cast("map<string,string>")
+    if parse_udfs is None:
+        # single-pass parse: text+links in ONE UDF over each page,
+        # materialized once (html dropped immediately after) — both
+        # the items write and the link expansion read the result
+        parsed = success.select(
+            "url",
+            "url_canon",
+            "depth",
+            "cookies",
+            transport_fields.alias("__tf"),
+            # per-request decode override (request.rs:74-90):
+            # encoding NULL → strict UTF-8, like the reference
+            parse_page_enc_udf(F.col("html"), F.col("encoding")).alias("p"),
+        )
+        # lazy: the items write materializes the parse; the link
+        # expansion then reads the cached result
+        parsed = _local_checkpoint(parsed, held)
+        items = parsed.select(
+            F.col("url"),
+            F.lit("extracted_text").alias("item_type"),
+            F.col("p.text").alias("text"),
+            F.col("__tf").alias("fields"),
+            F.lit(rnd).alias("rnd"),
+        )
+        raw_links = parsed.select(
+            F.col("url_canon").alias("base"),
+            F.col("depth").alias("parent_depth"),
+            F.col("cookies").alias("parent_cookies"),
+            F.explode(F.col("p.links")).alias("href"),
+        )
+    else:
+        text_udf, links_udf, fields_udf = parse_udfs
+        # a custom fields UDF owns the fields map; otherwise transport
+        # metadata (when present) rides there
+        fields_col = (
+            fields_udf(F.col("html"))
+            if fields_udf is not None
+            else transport_fields
+        )
+        items = success.select(
+            F.col("url"),
+            F.lit("extracted_text").alias("item_type"),
+            text_udf(F.col("html")).alias("text"),
+            fields_col.alias("fields"),
+            F.lit(rnd).alias("rnd"),
+        )
+        raw_links = success.select(
+            F.col("url_canon").alias("base"),
+            F.col("depth").alias("parent_depth"),
+            F.col("cookies").alias("parent_cookies"),
+            F.explode(links_udf(F.col("html"))).alias("href"),
+        )
+    # invalid-UTF-8 / unparsable pages yield text NULL → routed to
+    # the error channel (functions/text.py contract), never written
+    # as items. Counts come free from observations on the items
+    # write (no extra driver jobs).
+    obs_raw = Observation(f"items_raw_r{rnd}")
+    items = items.observe(
+        obs_raw,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("text").isNull().cast("long")).alias("n_null"),
+    ).filter(F.col("text").isNotNull())
+    obs_out = None
+    if item_pipelines is not None:
+        items = item_pipelines(items)  # X4
+        obs_out = Observation(f"items_out_r{rnd}")
+        items = items.observe(obs_out, F.count(F.lit(1)).alias("n"))
+    links = raw_links.withColumn(
+        "url", urljoin_udf(F.col("base"), F.col("href"))
+    ).filter(F.col("url").isNotNull())
+    # Response::follow copies the cookie jar onto followed requests
+    # (response.rs:186-203)
+    candidates = _new_requests(
+        links,
+        rnd,
+        depth=(F.col("parent_depth") + 1).cast("int"),
+        cookies=F.col("parent_cookies"),
+    )
+
+    # redirects re-enter at the same depth AND priority
+    # (response.rs:126-142), cookies copied like Response::follow;
+    # hop count rides in meta, bounded by max_redirects. The whole
+    # chain (UDF + union) is skipped when the round saw none — or
+    # when follow_redirects is off, in which case 3xx rows are
+    # terminal responses (counted, never re-enqueued).
+    if n_redirect > 0 and s.follow_redirects:
+        redirs = routes["redirect"].select(
+            urljoin_udf(
+                F.col("url_canon"), F.element_at(F.col("headers"), "location")
+            ).alias("url"),
+            F.col("depth"),
+            F.col("priority"),
+            F.col("cookies"),
+            # the reference downloader follows redirects within the SAME
+            # Request, so per-request timeout/encoding/flags persist
+            # across hops — carry them onto the re-enqueued row (a
+            # shift-jis page behind a 301 keeps its decode override)
+            F.col("timeout_ms"),
+            F.col("encoding"),
+            F.col("flags"),
+            (
+                F.coalesce(
+                    F.element_at(F.col("meta"), "redirect_hops").cast("int"),
+                    F.lit(0),
+                )
+                + 1
+            ).alias("hops"),
+        ).filter(
+            F.col("url").isNotNull()
+            & (F.col("hops") <= F.lit(s.max_redirects))
+        )
+        # the hop count survives into the new row's meta or
+        # max_redirects could never bound a multi-hop chain
+        redirs = _new_requests(
+            redirs,
+            rnd,
+            **{c: F.col(c) for c in (
+                "priority", "depth", "cookies", "timeout_ms", "encoding",
+                "flags",
+            )},
+            meta=F.map_from_arrays(
+                F.array(F.lit("redirect_hops")),
+                F.array(F.col("hops").cast("string")),
+            ),
+        )
+        candidates = candidates.unionByName(redirs)
+
+    # ---- enqueue: filters → in-batch dedup → seen anti-join (F1-F4, J1) ----
+    candidates = apply_enqueue_filters(candidates, s)
+    candidates = dedup_in_batch(candidates)
+    candidates = anti_join_seen(candidates, seen).select(*FRONTIER_COLS)
+    # one materialization — candidates feed the new-URL count, the seen
+    # delta and the frontier write; without this the parse-UDF chain
+    # would recompute 3-4× per round. Lazy: the driver's first write
+    # that reads it is the materializing action
+    candidates = _local_checkpoint(candidates, held)
+    return RoundPlan(
+        retry=routes["retry"],
+        n_batch=crow["n"] or 0,
+        n_responses=(crow["ok"] or 0) + n_redirect,
+        n_retry=crow["rty"] or 0,
+        n_error=crow["err"] or 0,
+        items=items,
+        candidates=candidates,
+        checkpoints=held,
+        obs_raw=obs_raw,
+        obs_out=obs_out,
+    )
 
 
 class CrawlEngine:
@@ -376,32 +699,14 @@ class CrawlEngine:
             df = df.withColumn("__host_delay", F.lit(None).cast("bigint"))
         return df
 
-    # ---- round-local cache hygiene ----
     def _persisted_rdd_ids(self) -> set[int]:
+        """Ids of every RDD persisted in this session (cache hygiene
+        checks: a finished crawl leaves none of its own behind)."""
         try:
             jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
             return {int(k) for k in jmap.keySet().toArray()}
         except Exception:
             return set()
-
-    def _release_round_rdds(self, before: set[int]) -> None:
-        """Drop localCheckpoint blocks created during a round once the
-        round is committed. Every round checkpoints its batch/fetched/
-        parsed/candidates frames (html + text payloads — hundreds of MB
-        per large round); the next round re-reads state from the store,
-        so these blocks are dead weight that otherwise accumulates for
-        the whole crawl (guide §5: unpersist when done — measured as
-        round-over-round slowdown and GC pressure on the 200k crawl,
-        and the dominant memory load of the 4M sustained crawl)."""
-        try:
-            jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
-            for k in jmap.keySet().toArray():
-                if int(k) not in before:
-                    rdd = jmap.get(k)
-                    if rdd is not None:
-                        rdd.unpersist(False)
-        except Exception:
-            pass  # cache hygiene only — never fail a committed round
 
     # ---- one round ----
     def _run_round(
@@ -412,19 +717,9 @@ class CrawlEngine:
         pages_served_total: int,
         frontier_hint: int = 1 << 62,
     ) -> dict:
-        import time as _time
-
-        _prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-        _t0 = _time.time()
-        _marks = []
-        _rdds_before = self._persisted_rdd_ids()
-
-        def _mark(label):
-            if _prof:
-                _marks.append((label, round(_time.time() - _t0, 2)))
-
         s = self.settings
         order = frontier_order(s.scheduler_type, s.crawl_strategy)
+        held: list = []  # this round's checkpoints, released after commit
 
         gated = frontier.filter(F.col("retry_not_before_round") > rnd)
         ready = frontier.filter(F.col("retry_not_before_round") <= rnd)
@@ -484,10 +779,11 @@ class CrawlEngine:
                 # lazy checkpoint: materialized by the round's FIRST
                 # action (the counter agg reads batch → ranked_all), so
                 # rank+cache+count land in one Spark job, not two
-                ranked_all = (
-                    allowed.withColumn("__budget", budget)
-                    .withColumn("host_rank", F.row_number().over(w))
-                    .localCheckpoint(eager=False)
+                ranked_all = _local_checkpoint(
+                    allowed.withColumn("__budget", budget).withColumn(
+                        "host_rank", F.row_number().over(w)
+                    ),
+                    held,
                 )
                 batch = (
                     ranked_all.filter(F.col("host_rank") <= F.col("__budget"))
@@ -518,8 +814,7 @@ class CrawlEngine:
                 batch = self.request_middlewares(batch)  # X2
             # lazy: the counter agg below is the materializing action;
             # every later consumer reads the cached partitions
-            batch = batch.localCheckpoint(eager=False)  # reused 5× below
-        _mark("rank+batch")
+            batch = _local_checkpoint(batch, held)  # reused 5× below
 
         if leftover is None:
             # rows that were politeness-deferred or over page_limit stay
@@ -540,295 +835,39 @@ class CrawlEngine:
                     self._cap_left_col() > 0
                 ).drop("__served", "__host_delay")
 
-        # ---- fetch (J2) + route ----
-        # strict mode (T1 fidelity, slot.rs:127-137): pace ONLY the frame
-        # feeding the fetch join — the fetched checkpoint below
-        # materializes it exactly once, so the sleeps run once per round
-        # and every other consumer of `batch` (leftover anti-join,
-        # counters) reads the unpaced rows. Row membership is identical.
-        fetch_src = batch
-        if s.strict_delay and (
-            max(s.domain_delay_ms, s.download_delay_ms) > 0
-            or self._has_host_delays
-        ):
-            from scrapy_rs_spark.operators.fetch import strict_spacing
-
-            fetch_src = strict_spacing(
-                batch,
-                default_delay_ms=max(s.domain_delay_ms, s.download_delay_ms),
-                host_delays=self.robots if self._has_host_delays else None,
-            )
-        # broadcast-batch fetch when the committed frontier size (an
-        # upper bound on this batch) fits the broadcast gate: the pages
-        # side — whose html payload dominates — is then scanned in
-        # place instead of sort-merge-shuffled every round. Strict
-        # pacing keeps the join shape that streams the paced rows.
-        fetched = fetch_join(
-            fetch_src,
+        plan = build_round_plan(
+            batch,
             self.pages,
-            default_timeout_ms=s.request_timeout_ms,
-            broadcast_batch=(
+            self._load_seen(),
+            rnd,
+            s,
+            # broadcast-batch fetch when the committed frontier size (an
+            # upper bound on this batch) fits the broadcast gate: the
+            # pages side — whose html payload dominates — is then
+            # scanned in place instead of sort-merge-shuffled every
+            # round. Strict pacing keeps the join shape that streams the
+            # paced rows.
+            broadcast=(
                 frontier_hint <= s.fetch_broadcast_max_batch
                 and not s.strict_delay
             ),
+            host_delays=self.robots if self._has_host_delays else None,
+            response_middlewares=self.response_middlewares,
+            parse_udfs=None if self._default_parse else (
+                self.parse_text_udf,
+                self.parse_links_udf,
+                self.parse_fields_udf,
+            ),
+            item_pipelines=self.item_pipelines,
         )
-        if self.response_middlewares is not None:
-            fetched = self.response_middlewares(fetched)  # X3
-        # lazy: the counter agg right below materializes the fetch join
-        # and computes all five route counters in ONE job
-        fetched = fetched.localCheckpoint(eager=False)
-        routes = split_fetched(fetched)
-        # ONE aggregation for all route counters (5 counts = 1 job, not 5
-        # — per-round driver actions are the fixed cost of a round)
-        from scrapy_rs_spark.operators.fetch import (
-            is_redirect,
-            is_retryable,
-            is_success,
-        )
-
-        st = F.col("status")
-        crow = fetched.agg(
-            F.count("*").alias("n"),
-            F.sum(is_success(st).cast("long")).alias("ok"),
-            F.sum(is_redirect(st).cast("long")).alias("red"),
-            F.sum(is_retryable(st).cast("long")).alias("rty"),
-            F.sum(
-                (
-                    ~is_success(st) & ~is_redirect(st) & ~is_retryable(st)
-                ).cast("long")
-            ).alias("err"),
-        ).collect()[0]
-        n_batch = crow["n"] or 0
-        n_success = crow["ok"] or 0
-        n_redirect = crow["red"] or 0
-        n_retry_in = crow["rty"] or 0
-        n_error = crow["err"] or 0
-        _mark("fetch+route")
-
-        # ---- parse (X1): items + links, one pandas-UDF pass ----
-        # AQE coalesces a sort-merge fetch-join's output by SIZE (html
-        # bytes), which can serialize the Python parse stage onto 1-2
-        # tasks; the parse cost is per-row CPU, so spread it across all
-        # cores explicitly — but ONLY when the join actually collapsed
-        # the partitioning: the broadcast-batch join preserves the
-        # pages scan's partitioning, and repartitioning there would
-        # shuffle every html byte once for nothing (guide §2.4)
-        success = routes["success"]
-        try:
-            fetched_parts = fetched.rdd.getNumPartitions()
-        except Exception:
-            fetched_parts = 0
-        if fetched_parts < self.spark.sparkContext.defaultParallelism:
-            success = success.repartition(
-                self.spark.sparkContext.defaultParallelism
-            )
-        # optional transport metadata (response.rs:35-45) projected by
-        # fetch_join when the pages table carries it — surfaced to item
-        # pipelines through the items.fields map (response middlewares
-        # already see the raw columns on the fetched frame)
-        transport = [
-            c
-            for c in ("certificate", "ip_address", "protocol")
-            if c in fetched.columns
-        ]
-        if transport:
-            transport_fields = F.map_filter(
-                F.map_from_arrays(
-                    F.array(*[F.lit(c) for c in transport]),
-                    F.array(*[F.col(c).cast("string") for c in transport]),
-                ),
-                lambda _, v: v.isNotNull(),
-            )
-        else:
-            transport_fields = F.lit(None).cast("map<string,string>")
-        if self._default_parse:
-            # single-pass parse: text+links in ONE UDF over each page,
-            # materialized once (html dropped immediately after) — both
-            # the items write and the link expansion read the result
-            parsed = success.select(
-                "url",
-                "url_canon",
-                "depth",
-                "cookies",
-                transport_fields.alias("__tf"),
-                # per-request decode override (request.rs:74-90):
-                # encoding NULL → strict UTF-8, like the reference
-                parse_page_enc_udf(F.col("html"), F.col("encoding")).alias(
-                    "p"
-                ),
-                # lazy: the items write materializes the parse; the link
-                # expansion then reads the cached result
-            ).localCheckpoint(eager=False)
-            items = parsed.select(
-                F.col("url"),
-                F.lit("extracted_text").alias("item_type"),
-                F.col("p.text").alias("text"),
-                F.col("__tf").alias("fields"),
-                F.lit(rnd).alias("rnd"),
-            )
-            raw_links = parsed.select(
-                F.col("url_canon").alias("base"),
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(F.col("p.links")).alias("href"),
-            )
-        else:
-            # a custom parse_fields_udf owns the fields map; otherwise
-            # transport metadata (when present) rides there
-            fields_col = (
-                self.parse_fields_udf(F.col("html"))
-                if self.parse_fields_udf is not None
-                else transport_fields
-            )
-            items = success.select(
-                F.col("url"),
-                F.lit("extracted_text").alias("item_type"),
-                self.parse_text_udf(F.col("html")).alias("text"),
-                fields_col.alias("fields"),
-                F.lit(rnd).alias("rnd"),
-            )
-            raw_links = success.select(
-                F.col("url_canon").alias("base"),
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(self.parse_links_udf(F.col("html"))).alias("href"),
-            )
-        # invalid-UTF-8 / unparsable pages yield text NULL → routed to
-        # the error channel (functions/text.py contract), never written
-        # as items. Counts come free from observations on the items
-        # write (no extra driver jobs).
-        from pyspark.sql import Observation
-
-        obs_raw = Observation(f"items_raw_r{rnd}")
-        items = items.observe(
-            obs_raw,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("text").isNull().cast("long")).alias("n_null"),
-        ).filter(F.col("text").isNotNull())
-        obs_out = None
-        if self.item_pipelines is not None:
-            items = self.item_pipelines(items)  # X4
-            obs_out = Observation(f"items_out_r{rnd}")
-            items = items.observe(obs_out, F.count(F.lit(1)).alias("n"))
-        links = raw_links.withColumn(
-            "url", urljoin_udf(F.col("base"), F.col("href"))
-        ).filter(F.col("url").isNotNull())
-        # ONE Project node in FRONTIER_COLS order — a withColumn chain
-        # here adds ~16 nested Projects that Catalyst must analyze and
-        # collapse EVERY round; measured ~1.5 s/round of pure planning
-        # time on the politeness crawl (localCheckpoint plans the query
-        # even when lazy). unresolvable hrefs already filtered above;
-        # url is canonical post-urljoin; Response::follow copies the
-        # cookie jar onto followed requests (response.rs:186-203)
-        candidates = links.select(
-            F.col("url"),
-            F.col("url").alias("url_canon"),
-            url_hash_expr(F.col("url"), F.lit("GET")).alias("url_hash"),
-            F.expr("parse_url(url, 'HOST')").alias("host"),
-            F.lit("GET").alias("method"),
-            F.lit(0).alias("priority"),
-            (F.col("parent_depth") + 1).cast("int").alias("depth"),
-            F.lit(rnd + 1).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            F.lit(0).alias("retry_count"),
-            F.lit(False).alias("dont_filter"),
-            F.lit(0).alias("retry_not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-            F.lit(None).cast("binary").alias("body"),
-            F.col("parent_cookies").alias("cookies"),
-            F.lit(None).cast("bigint").alias("timeout_ms"),
-            F.lit(None).cast("string").alias("encoding"),
-            F.lit(None).cast("array<string>").alias("flags"),
-            F.lit(None).cast("string").alias("proxy"),
-        )
-
-        # redirects re-enter at the same depth AND priority
-        # (response.rs:126-142), cookies copied like Response::follow;
-        # hop count rides in meta, bounded by max_redirects. The whole
-        # chain (UDF + union) is skipped when the round saw none — or
-        # when follow_redirects is off, in which case 3xx rows are
-        # terminal responses (counted, never re-enqueued).
-        follow = n_redirect > 0 and s.follow_redirects
-        redirs = None if not follow else routes["redirect"].select(
-            urljoin_udf(
-                F.col("url_canon"), F.element_at(F.col("headers"), "location")
-            ).alias("url"),
-            F.col("depth"),
-            F.col("priority"),
-            F.col("cookies"),
-            # the reference downloader follows redirects within the SAME
-            # Request, so per-request timeout/encoding/flags persist
-            # across hops — carry them onto the re-enqueued row (a
-            # shift-jis page behind a 301 keeps its decode override)
-            F.col("timeout_ms"),
-            F.col("encoding"),
-            F.col("flags"),
-            (
-                F.coalesce(
-                    F.element_at(F.col("meta"), "redirect_hops").cast("int"),
-                    F.lit(0),
-                )
-                + 1
-            ).alias("hops"),
-        )
-        # single Project (see candidates note). hop count survives into
-        # the new row's meta or max_redirects could never bound a
-        # multi-hop chain; proxy NOT inherited across redirects (the
-        # reference never copies it onto the follow-up Request)
-        redirs = None if redirs is None else (
-            redirs.filter(
-                F.col("url").isNotNull()
-                & (F.col("hops") <= F.lit(s.max_redirects))
-            ).select(
-                F.col("url"),
-                F.col("url").alias("url_canon"),
-                url_hash_expr(F.col("url"), F.lit("GET")).alias("url_hash"),
-                F.expr("parse_url(url, 'HOST')").alias("host"),
-                F.lit("GET").alias("method"),
-                F.col("priority"),
-                F.col("depth"),
-                F.lit(rnd + 1).alias("discovery_round"),
-                F.lit(0).cast("long").alias("discovery_seq"),
-                F.lit(0).alias("retry_count"),
-                F.lit(False).alias("dont_filter"),
-                F.lit(0).alias("retry_not_before_round"),
-                F.map_from_arrays(
-                    F.array(F.lit("redirect_hops")),
-                    F.array(F.col("hops").cast("string")),
-                ).alias("meta"),
-                F.lit(None).cast("binary").alias("body"),
-                F.col("cookies"),
-                F.col("timeout_ms"),
-                F.col("encoding"),
-                F.col("flags"),
-                F.lit(None).cast("string").alias("proxy"),
-            )
-        )
-        _mark("cand-built")
-        candidates = candidates.select(*FRONTIER_COLS)
-        if redirs is not None:
-            candidates = candidates.unionByName(redirs.select(*FRONTIER_COLS))
-
-        # ---- enqueue: filters → in-batch dedup → seen anti-join (F1-F4, J1) ----
-        candidates = apply_enqueue_filters(candidates, s)
-        candidates = dedup_in_batch(candidates)
-        _mark("enq-built")
-        seen = self._load_seen()
-        _mark("seen-load")
-        candidates = anti_join_seen(candidates, seen).select(*FRONTIER_COLS)
-        _mark("antijoin-built")
-        # one materialization — candidates feed the count, the seen delta,
-        # and the frontier commit; without this the parse-UDF chain would
-        # recompute 3-4× per round. Lazy: the new-URL count below is the
-        # materializing action (count+cache = one job)
-        candidates = candidates.localCheckpoint(eager=False)
-        _mark("parse+enqueue")
+        held += plan.checkpoints
+        candidates = plan.candidates
 
         # ---- retries (J5/X5): skipped entirely on clean rounds ----
         retries = (
             None
-            if n_retry_in == 0
-            else build_retries(routes["retry"], rnd, s).select(*FRONTIER_COLS)
+            if plan.n_retry == 0
+            else build_retries(plan.retry, rnd, s)
         )
 
         next_frontier = (
@@ -866,26 +905,8 @@ class CrawlEngine:
         # DAGScheduler accumulator-update failures, slower sustained
         # crawls, and one outright write failure at the 4M design point.
         self.store.begin_round(rnd)
-        _mark("pre-items")
-        self.store.write_items(rnd, items)
-        _mark("items-write")
-        raw = obs_raw.get
-        n_parsed = int(raw["n"] or 0)
-        n_null_text = int(raw["n_null"] or 0)
-        if obs_out is not None:
-            n_items = int(obs_out.get["n"] or 0)
-        else:
-            n_items = n_parsed - n_null_text
-
-        metrics = {
-            "round": rnd,
-            "requests": n_batch,
-            "responses": n_success + n_redirect,
-            "items": n_items,
-            "errors": n_error,
-            "retries": 0,  # filled below
-            "new_urls": 0,  # filled below
-        }
+        self.store.write_items(rnd, plan.items)
+        n_items, n_null_text = plan.item_counts()
         # frontier staged next (still invisible until MANIFEST): its
         # write is the action that materializes the candidates
         # checkpoint, and an Observation riding it returns BOTH the
@@ -911,17 +932,24 @@ class CrawlEngine:
         fr_vals = obs_fr.get
         n_new = int(fr_vals["n_new"] or 0)
         n_retries_requeued = 0 if retries is None else retries.count()
-        _mark("counts")
-        n_exhausted = n_retry_in - n_retries_requeued
-        metrics["retries"] = n_retries_requeued
-        # decode failures (text NULL) are errors, not items — the page
-        # fetched but produced nothing (text.py error-channel contract)
-        metrics["errors"] = n_error + n_exhausted + n_null_text
-        metrics["new_urls"] = n_new
-        metrics["frontier_size"] = int(fr_vals["n"] or 0)
         # seen grows only at enqueue: cumulative seen-delta rows
         self._seen_total += n_new
-        metrics["seen_size"] = self._seen_total
+        metrics = {
+            "round": rnd,
+            "requests": plan.n_batch,
+            "responses": plan.n_responses,
+            "items": n_items,
+            # exhausted retries and decode failures (text NULL) are
+            # errors, not items — the page fetched but produced nothing
+            # (text.py error-channel contract)
+            "errors": plan.n_error
+            + (plan.n_retry - n_retries_requeued)
+            + n_null_text,
+            "retries": n_retries_requeued,
+            "new_urls": n_new,
+            "frontier_size": int(fr_vals["n"] or 0),
+            "seen_size": self._seen_total,
+        }
 
         self.store.commit_round(
             rnd,
@@ -932,11 +960,7 @@ class CrawlEngine:
             metrics,
             clean=False,
         )
-        self._release_round_rdds(_rdds_before)
-        _mark("commit")
-        if _prof:
-            print(f"[round {rnd}] n={n_batch} " + " ".join(
-                f"{k}={v}s" for k, v in _marks))
+        release_checkpoints(held)
         return metrics
 
     # ---- public API (X7 parity: Engine::run → stats) ----
@@ -967,8 +991,6 @@ class CrawlEngine:
         # (the same trick the round loop uses): one execution of the
         # seeds plan — canonicalize UDF included — instead of two
         # standalone counts plus a write
-        from pyspark.sql import Observation
-
         obs_valid = Observation("seed_validity")
         seeds_df = seeds_df.observe(
             obs_valid,

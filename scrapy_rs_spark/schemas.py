@@ -49,6 +49,9 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
+# frontier column order, shared by every projection that builds frontier rows
+FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
+
 FRONTIER_DDL = (
     "url STRING, url_canon STRING, url_hash BIGINT, host STRING, method STRING,"
     " priority INT, depth INT, discovery_round INT, discovery_seq BIGINT,"

@@ -6,24 +6,30 @@ The batch-iterative CrawlEngine is the faithful set-oriented model
 (SURVEY.md §7.0); this module is the Structured Streaming restatement
 for deployments that want a *standing* crawler:
 
-  frontier dir ──readStream──► foreachBatch(round operators) ──┐
-        ▲                                                      │
-        └──────────── new candidates appended ─────────────────┘
+  frontier dir ──readStream──► foreachBatch(build_round_plan) ──┐
+        ▲                                                       │
+        └──────────── new candidates appended ──────────────────┘
 
-Each micro-batch runs the SAME operators as a CrawlEngine round
-(fetch-as-join, parse UDFs, enqueue filters, in-batch dedup, seen
-anti-join) and appends discovered candidates back into the watched
-frontier directory — the stream feeds itself until the frontier
-drains. The seen set lives in batch_id=N-partitioned parquet. Streaming
+Each micro-batch runs plans.engine.build_round_plan, the same function
+a CrawlEngine round runs: fetch join (strict spacing under the global
+delay), route counters, single-pass parse with the per-request
+encoding, undecodable pages to the error channel instead of items,
+redirects followed up to max_redirects, enqueue filters, in-batch
+dedup, seen anti-join. It appends discovered candidates back into the
+watched frontier directory — the stream feeds itself until the
+frontier drains. What a round has and a micro-batch does not: no
+ranking or politeness budget (the micro-batch is the batch), no
+robots table, no request/response middlewares, custom parse UDFs or
+item pipelines, and no retries — retryable responses are dropped,
+because a stream has no round clock to gate retry_not_before_round.
+
+The seen set lives in batch_id=N-partitioned parquet. Streaming
 execution is at-least-once (a crashed micro-batch replays), so every
 sink write is idempotent: items/seen overwrite their batch_id=N
 partition, the frontier feed materializes under deterministic
 per-batch file names (the file source tracks processed files by path),
 and the seen anti-join excludes the current batch's own partition so a
 replay reproduces — not re-appends — its first attempt.
-
-Politeness in streaming mode: micro-batch duration is the round
-duration, so per-host budgets discretize the same way (T1).
 """
 
 from __future__ import annotations
@@ -34,21 +40,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scrapy_rs_spark.functions.text import extract_links_udf, extract_text_udf
-from scrapy_rs_spark.functions.url import urljoin_udf, url_hash_expr
-from scrapy_rs_spark.operators.dedup import anti_join_seen, dedup_in_batch
-from scrapy_rs_spark.operators.fetch import fetch_join, is_success
+from scrapy_rs_spark.operators.dedup import dedup_in_batch
 from scrapy_rs_spark.operators.scheduler import apply_enqueue_filters
-from scrapy_rs_spark.schemas import FRONTIER_DDL
+from scrapy_rs_spark.plans.engine import build_round_plan, release_checkpoints
+from scrapy_rs_spark.schemas import FRONTIER_COLS, FRONTIER_DDL
 from scrapy_rs_spark.settings import Settings
 from scrapy_rs_spark.sources.seeds import seeds_frontier
-
-FRONTIER_COLS = [
-    "url", "url_canon", "url_hash", "host", "method", "priority", "depth",
-    "discovery_round", "discovery_seq", "retry_count", "dont_filter",
-    "retry_not_before_round", "meta", "body", "cookies",
-    "timeout_ms", "encoding", "flags", "proxy",
-]
 
 
 class StreamingCrawl:
@@ -143,92 +140,26 @@ class StreamingCrawl:
         if batch.isEmpty():
             return
         bid = int(batch_id)
-        # strict per-request spacing (T1 fidelity mode) applies to the
-        # streaming path too — same operator, same semantics as the
-        # batch engine (the standing crawl has no robots table, so only
-        # the global delay feeds the schedule); membership unchanged
-        fetch_src = batch
-        strict_delay_ms = max(s.domain_delay_ms, s.download_delay_ms)
-        if s.strict_delay and strict_delay_ms > 0:
-            from scrapy_rs_spark.operators.fetch import strict_spacing
-
-            fetch_src = strict_spacing(
-                fetch_src, default_delay_ms=strict_delay_ms
-            )
-        # a micro-batch is one round's staged candidate file(s) —
-        # bounded and small next to the pages table, so the broadcast
-        # form of the fetch join applies (html scanned in place, never
-        # shuffled), exactly as in the batch engine's gated path
-        fetched = fetch_join(
-            fetch_src, self.pages,
-            default_timeout_ms=s.request_timeout_ms,
-            broadcast_batch=not s.strict_delay,
-        ).localCheckpoint(eager=True)
-        success = fetched.filter(is_success(F.col("status")))
-        try:
-            fetched_parts = fetched.rdd.getNumPartitions()
-        except Exception:
-            fetched_parts = 0
-        if fetched_parts < self.spark.sparkContext.defaultParallelism:
-            success = success.repartition(
-                self.spark.sparkContext.defaultParallelism
-            )
-        items = success.select(
-            "url",
-            F.lit("extracted_text").alias("item_type"),
-            extract_text_udf(F.col("html")).alias("text"),
-            F.lit(None).cast("map<string,string>").alias("fields"),
-            F.lit(bid).alias("rnd"),
+        plan = build_round_plan(
+            batch,
+            self.pages,
+            # membership is judged against OTHER batches' seen
+            # partitions — a replay must not see its own first
+            # attempt's hashes or the anti-join would wrongly drain the
+            # batch to empty
+            self._load_seen(exclude_batch=bid),
+            bid,
+            s,
+            # a micro-batch is one round's staged candidate file(s) —
+            # bounded and small next to the pages table, so the
+            # broadcast fetch join applies unless strict pacing needs
+            # the streaming join shape (as in the engine)
+            broadcast=not s.strict_delay,
         )
-        items.write.mode("overwrite").parquet(
+        plan.items.write.mode("overwrite").parquet(
             os.path.join(self.items_dir, f"batch_id={bid}")
         )
-
-        links = (
-            success.select(
-                F.col("url_canon").alias("base"),
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(extract_links_udf(F.col("html"))).alias("href"),
-            )
-            .withColumn("url", urljoin_udf(F.col("base"), F.col("href")))
-            .filter(F.col("url").isNotNull())
-        )
-        candidates = (
-            links.select(
-                "url",
-                F.col("url").alias("url_canon"),
-                (F.col("parent_depth") + 1).cast("int").alias("depth"),
-                # follow copies the cookie jar (response.rs:186-203)
-                F.col("parent_cookies").alias("cookies"),
-            )
-            .withColumn("host", F.expr("parse_url(url_canon, 'HOST')"))
-            .withColumn(
-                "url_hash", url_hash_expr(F.col("url_canon"), F.lit("GET"))
-            )
-            .withColumn("method", F.lit("GET"))
-            .withColumn("priority", F.lit(0))
-            .withColumn("discovery_round", F.lit(int(batch_id) + 1))
-            .withColumn("discovery_seq", F.lit(0).cast("long"))
-            .withColumn("retry_count", F.lit(0))
-            .withColumn("dont_filter", F.lit(False))
-            .withColumn("retry_not_before_round", F.lit(0))
-            .withColumn("meta", F.lit(None).cast("map<string,string>"))
-            .withColumn("body", F.lit(None).cast("binary"))
-            .withColumn("timeout_ms", F.lit(None).cast("bigint"))
-            .withColumn("encoding", F.lit(None).cast("string"))
-            .withColumn("flags", F.lit(None).cast("array<string>"))
-            .withColumn("proxy", F.lit(None).cast("string"))
-        )
-        candidates = apply_enqueue_filters(candidates, s)
-        candidates = dedup_in_batch(candidates)
-        # membership is judged against OTHER batches' seen partitions —
-        # a replay must not see its own first attempt's hashes or the
-        # anti-join would wrongly drain the batch to empty
-        candidates = anti_join_seen(
-            candidates, self._load_seen(exclude_batch=bid)
-        ).select(*FRONTIER_COLS)
-        candidates = candidates.localCheckpoint(eager=True)
+        candidates = plan.candidates
         if not candidates.isEmpty():
             candidates.select("url_hash").write.mode("overwrite").parquet(
                 os.path.join(self.seen_dir, f"batch_id={bid}")
@@ -250,6 +181,7 @@ class StreamingCrawl:
                         self.frontier_dir, f"batch{bid:06d}-{i:04d}.parquet"
                     ),
                 )
+        release_checkpoints(plan.checkpoints)
 
     def run(
         self,
